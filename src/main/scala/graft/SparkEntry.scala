@@ -143,7 +143,7 @@ object SparkEntry {
     // pair graph; root = canonical kept doc per duplicate cluster.
     "q34_dedup_keepset" -> ((s, d) =>
       DedupOp.keepSet(DedupOp.ngramJaccardTable(Tables.documents(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))
+        BucketedOps.Warehouse, inputTag = Some(d))
         .select("da", "db"))),
 
     // A1's map-typed metrics shape (reference CelltowerEvent.metrics:
@@ -276,7 +276,7 @@ object SparkEntry {
     // fix for a repeated fact⋈fact shuffle at 100 TB.
     "q54_bucketed_join" -> ((s, d) =>
       BucketedOps.bucketedOrderRevenue(Tables.orders(s, d),
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d))),
 
     // Training-data prep: fixed-size token chunks with stride (partial
     // tail kept), one row per chunk with an engine-reproducible
@@ -301,7 +301,7 @@ object SparkEntry {
     // (PartitionFilters, zero data filters — plan asserted in spec).
     "q58_partition_pruned" -> ((s, d) =>
       BucketedOps.prunedSourceStats(Tables.documents(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))),
+        BucketedOps.Warehouse, inputTag = Some(d))),
 
     // Bucketized range join: events-in-session-interval through a
     // time-bucket equi-join + exact residual predicate (the inequality
@@ -375,7 +375,7 @@ object SparkEntry {
     "q73_dup_cluster_sizes" -> ((s, d) =>
       DedupOp.dupClusterSizesFromPairs(
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Sequence packing: each doc's (bin, offset) in the fixed-length
     // training-example layout, integer-exact, one window shuffle.
@@ -388,7 +388,7 @@ object SparkEntry {
     "q75_source_overlap" -> ((s, d) =>
       DedupOp.sourceOverlapFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Containment dedup: shorter doc is an exact prefix of a longer
     // one (crawl truncation), prefix-blocked, never all-pairs.
@@ -474,7 +474,7 @@ object SparkEntry {
     "q89_best_of_cluster" -> ((s, d) =>
       DedupOp.bestOfClusterFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Sub-document span dedup audit: non-overlapping 32-token windows,
     // global first occurrence survives, per-doc duplicated-span ratio.
@@ -496,7 +496,7 @@ object SparkEntry {
     // -> shares q50's oracle.
     "q92_ivf_pruned" -> ((s, d) =>
       SimilarityOp.ivfPartitionedTopK(Tables.embeddings(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))),
+        BucketedOps.Warehouse, inputTag = Some(d))),
 
     // Split-leakage audit: near-dup pairs labeled with each side's
     // hash-derived split (q70's exact bucket rule) — off-diagonal
@@ -505,7 +505,7 @@ object SparkEntry {
     "q93_split_leakage" -> ((s, d) =>
       DedupOp.splitLeakageFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Vocab size for declared coverage thresholds via count-of-counts
     // classes — exact, with no per-type global rank window.
@@ -559,16 +559,16 @@ object SparkEntry {
     "q102_pagerank" -> ((s, d) =>
       GraphOps.pageRank(GraphOps.custSuppEdgesTable(
         Tables.orders(s, d), Tables.lineitem(s, d),
-        "/tmp/graft_warehouse", Some(d)))),
+        BucketedOps.Warehouse, Some(d)))),
 
     // Exact triangle count on the co-purchase graph via degree-ordered
     // wedges (the O(m^1.5) orientation); oracle re-derives the count
     // with the plain id-ordered three-way join.
     "q103_triangles" -> ((s, d) => {
       val edges = GraphOps.copurchaseEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", Some(d))
+        Tables.lineitem(s, d), BucketedOps.Warehouse, Some(d))
       GraphOps.triangleCount(edges, Some(GraphOps.triCountsTable(
-        edges, "/tmp/graft_warehouse", Some(d))))
+        edges, BucketedOps.Warehouse, Some(d))))
     }),
 
     // BM25 ranked retrieval: doc-length-normalized, tf-saturating
@@ -605,7 +605,7 @@ object SparkEntry {
     // (nodes, edges) per superstep.
     "q110_kcore" -> ((s, d) =>
       GraphOps.kCore(GraphOps.repeatEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Z-order vs linear clustering audit: per-dimension total probe
     // cost of value-range files under each layout, integer-exact.
@@ -655,7 +655,7 @@ object SparkEntry {
     // index stance); the timed query projects the k-row merge list.
     "q119_bpe_merges" -> ((s, d) =>
       TextOps.bpeMergesServed(Tables.documents(s, d),
-        "/tmp/graft_warehouse", k = 6, inputTag = Some(d))),
+        BucketedOps.Warehouse, k = 6, inputTag = Some(d))),
 
     // Order-2 behavioral sequences: top event-type trigrams.
     "q120_trigrams" -> ((s, d) =>
@@ -706,7 +706,7 @@ object SparkEntry {
     // the levels as chained CTEs.
     "q129_bfs_levels" -> ((s, d) =>
       GraphOps.bfsLevels(GraphOps.repeatEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Pearson correlation screen from exact integer moments; scalar
     // double math only (no float SUM), fixed-point ppm output.
@@ -772,7 +772,7 @@ object SparkEntry {
     // via the shared exact-moment correlation kernel.
     "q141_assortativity" -> ((s, d) =>
       GraphOps.degreeAssortativity(GraphOps.repeatEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Leave-one-out kNN label accuracy per class — the embedding-
     // quality eval over the exact top-k ground truth.
@@ -794,7 +794,7 @@ object SparkEntry {
     // repeat weight — the item-item CF serving table.
     "q145_copurchase_recs" -> ((s, d) =>
       GraphOps.copurchaseRecs(GraphOps.weightedEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Hour-of-day x day-of-week seasonality matrix from pure integer
     // epoch arithmetic (no calendar functions).
@@ -810,13 +810,13 @@ object SparkEntry {
     // integer weights) off the write-once weighted edge layout.
     "q148_label_prop" -> ((s, d) =>
       GraphOps.labelPropagation(GraphOps.weightedEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Bellman-Ford shortest paths (4 relaxation rounds), integer hop
     // costs costScale div weight, same weighted layout.
     "q149_sssp" -> ((s, d) =>
       GraphOps.sssp(GraphOps.weightedEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Gini-Simpson token diversity per source — the diversity index
     // that is exactly rational, so it hash-gates (entropy needs log).
@@ -856,7 +856,7 @@ object SparkEntry {
     // the oracle re-derives from raw text, keeping the layout checked.
     "q156_prefix_jaccard" -> ((s, d) =>
       DedupOp.prefixJaccardTable(Tables.documents(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))
+        BucketedOps.Warehouse, inputTag = Some(d))
         .orderBy("da", "db")),
 
     // nDCG@10 retrieval audit in exact 1e6-unit integer discounts:
@@ -928,7 +928,7 @@ object SparkEntry {
     // passes — the centrality sketch that scales.
     "q170_landmark_closeness" -> ((s, d) =>
       GraphOps.landmarkCloseness(GraphOps.repeatEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Join-key skew audit: per-key share, max/mean ratio, and the salt
     // factor a skewed shuffle would need — the 100×-scale-up pre-check.
@@ -939,7 +939,7 @@ object SparkEntry {
     // filtered dim at RUN time — q58's static sibling, runtime form.
     "q172_dpp_stats" -> ((s, d) =>
       BucketedOps.dppSourceStats(Tables.documents(s, d), Tables.nation(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))),
+        BucketedOps.Warehouse, inputTag = Some(d))),
 
     // Dedup threshold sensitivity: pairs / implicated docs / token mass
     // per candidate Jaccard threshold — the knob's blast radius,
@@ -947,7 +947,7 @@ object SparkEntry {
     "q173_dedup_sensitivity" -> ((s, d) =>
       DedupOp.dedupSensitivityFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // kNN confidence calibration: realized accuracy per vote-share
     // bucket — the check before vote share becomes a quality score.
@@ -975,7 +975,7 @@ object SparkEntry {
     "q178_assoc_rules" -> ((s, d) =>
       GraphOps.associationRules(Tables.lineitem(s, d),
         GraphOps.weightedEdgesTable(Tables.lineitem(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Time-decayed popularity via exact integer half-life shifts,
     // anchored at the data's max date (never wall-clock).
@@ -1011,7 +1011,7 @@ object SparkEntry {
     // exact-integer community quality, per-brand contributions in ppm.
     "q185_brand_modularity" -> ((s, d) =>
       GraphOps.brandModularity(GraphOps.copurchaseEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", Some(d)),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, Some(d)),
         Tables.part(s, d))),
 
     // Byte-value histogram per media kind — the corrupt-payload audit,
@@ -1047,7 +1047,7 @@ object SparkEntry {
     // wedge generation can never go quadratic through a hub.
     "q191_link_prediction" -> ((s, d) =>
       GraphOps.linkPrediction(GraphOps.repeatEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", inputTag = Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // First-seen shingle novelty per source — the corpus-freshness /
     // boilerplate audit; arrival order = doc_id, nothing pairs docs.
@@ -1073,7 +1073,7 @@ object SparkEntry {
     // the oracle retrains from raw text, keeping the gate honest.
     "q195_bpe_apply" -> ((s, d) =>
       TextOps.bpeApplyStatsServed(Tables.documents(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))),
+        BucketedOps.Warehouse, inputTag = Some(d))),
 
     // Theil–Sen robust slope per event type — the nonparametric trend
     // ESTIMATOR pairing with q176's Mann–Kendall test; exact integer
@@ -1102,7 +1102,7 @@ object SparkEntry {
     "q200_cluster_sources" -> ((s, d) =>
       DedupOp.clusterSourceDiversityFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Per-label centroid drift between corpus halves — the embedding
     // distribution-shift monitor, exact in quantized 1e-4 units.
@@ -1229,13 +1229,13 @@ object SparkEntry {
     // the oracle re-derives the index from raw text.
     "q224_term_index" -> ((s, d) =>
       TextOps.bm25TermIndexTable(Tables.documents(s, d),
-        "/tmp/graft_warehouse", inputTag = Some(d))
+        BucketedOps.Warehouse, inputTag = Some(d))
         .orderBy("term", "rank")),
 
     // Partition-pruned term-index serving: write-once term-partitioned
     // postings; a term query reads only its directory (q92 precedent).
     "q225_term_serve" -> ((s, d) =>
-      TextOps.termIndexServe(Tables.documents(s, d), "/tmp/graft_warehouse",
+      TextOps.termIndexServe(Tables.documents(s, d), BucketedOps.Warehouse,
         inputTag = Some(d))),
 
     // Model-free quality ensemble: rank-average of three independent
@@ -1368,7 +1368,7 @@ object SparkEntry {
     "q250_chaining_audit" -> ((s, d) =>
       DedupOp.chainingFromPairs(
         DedupOp.minhashPairsTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d))
+          BucketedOps.Warehouse, inputTag = Some(d))
           .select("da", "db"))),
 
     // Approx-binned RFM: quintile boundaries from a bottom-k hash
@@ -1465,7 +1465,7 @@ object SparkEntry {
     "q266_pair_audit_sample" -> ((s, d) =>
       DedupOp.pairAuditSample(
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Quality-ranked per-source token budget (q71's curriculum
     // sibling): best-docs-first greedy fill with per-source yield and
@@ -1508,9 +1508,9 @@ object SparkEntry {
     // write-once wedge-close layout (one enumeration for q103+q273).
     "q273_local_clustering" -> ((s, d) => {
       val edges = GraphOps.copurchaseEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", Some(d))
+        Tables.lineitem(s, d), BucketedOps.Warehouse, Some(d))
       GraphOps.localClustering(edges, Some(GraphOps.triCountsTable(
-        edges, "/tmp/graft_warehouse", Some(d))))
+        edges, BucketedOps.Warehouse, Some(d))))
     }),
 
     // Haar multiresolution detail-energy spectrum of the hourly event
@@ -1539,9 +1539,9 @@ object SparkEntry {
     "q277_mcnemar" -> ((s, d) =>
       DedupOp.detectorMcnemarFromPairs(
         DedupOp.minhashPairsTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)),
+          BucketedOps.Warehouse, inputTag = Some(d)),
         DedupOp.simhashPairsTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Greedy k-center (farthest-point-first) coreset over the qmod
     // candidate pool: maximally-diverse exemplar selection with the
@@ -1556,23 +1556,23 @@ object SparkEntry {
     "q279_pak_curve" -> ((s, d) =>
       DedupOp.detectorPrecisionAtK(
         DedupOp.minhashPairsTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)),
+          BucketedOps.Warehouse, inputTag = Some(d)),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Degree-distribution octave histogram of the co-purchase graph:
     // integer log2 bins via a broadcast boundary table, per-octave
     // node count, degree mass, and successive decay ratio in ppm.
     "q280_degree_octaves" -> ((s, d) =>
       GraphOps.degreeOctaves(GraphOps.copurchaseEdgesTable(
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, Some(d)))),
 
     // Global transitivity (3T/W) of the verified near-dup graph off
     // the write-once exact-pair layout — is CC-based dedup clustering
     // cliques or gluing chains at this threshold?
     "q281_dup_transitivity" -> ((s, d) =>
       DedupOp.dupTransitivity(DedupOp.ngramJaccardTable(
-        Tables.documents(s, d), "/tmp/graft_warehouse",
+        Tables.documents(s, d), BucketedOps.Warehouse,
         inputTag = Some(d)))),
 
     // Tokenizer budgeting: pooled bytes per whitespace/regex token by
@@ -1587,18 +1587,18 @@ object SparkEntry {
     "q283_cochran_q" -> ((s, d) =>
       DedupOp.cochranQFromPairs(
         DedupOp.minhashPairsTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)),
+          BucketedOps.Warehouse, inputTag = Some(d)),
         DedupOp.simhashPairsTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)),
+          BucketedOps.Warehouse, inputTag = Some(d)),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // HITS hubs/authorities on the customer-supplier bipartite graph:
     // exact integer power iteration in DECIMAL(38,0), max-normalized
     // ppm output, top-10 per side.
     "q284_hits" -> ((s, d) =>
       GraphOps.hits(GraphOps.custSuppEdgesTable(Tables.orders(s, d),
-        Tables.lineitem(s, d), "/tmp/graft_warehouse", Some(d)))),
+        Tables.lineitem(s, d), BucketedOps.Warehouse, Some(d)))),
 
     // Nelson-Aalen cumulative hazard on the repurchase survival frame
     // (q246's additive sibling) - fully relational, no driver fold.
@@ -1610,7 +1610,7 @@ object SparkEntry {
     // pair similarities via an exact integer squaring ladder.
     "q286_lsh_planner" -> ((s, d) =>
       DedupOp.lshBandPlanner(DedupOp.ngramJaccardTable(
-        Tables.documents(s, d), "/tmp/graft_warehouse",
+        Tables.documents(s, d), BucketedOps.Warehouse,
         inputTag = Some(d)))),
 
     // Language purity of near-dup clusters (CC over the write-once
@@ -1618,7 +1618,7 @@ object SparkEntry {
     "q287_cluster_purity" -> ((s, d) =>
       DedupOp.clusterLangPurityFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Winnowing fingerprint density per source vs the 2/(win+1) MOSS
     // theory - the fingerprint-index storage planner.
@@ -1630,7 +1630,7 @@ object SparkEntry {
     // a giant component? Off the write-once pair layout.
     "q289_percolation" -> ((s, d) =>
       DedupOp.percolationCurve(DedupOp.ngramJaccardTable(
-        Tables.documents(s, d), "/tmp/graft_warehouse",
+        Tables.documents(s, d), BucketedOps.Warehouse,
         inputTag = Some(d)))),
 
     // SimHash per-bit bias audit: each signature bit should be ~50%
@@ -1638,7 +1638,7 @@ object SparkEntry {
     // write-once signature layout.
     "q290_simhash_bits" -> ((s, d) =>
       DedupOp.simhashBitBiasFromSigs(DedupOp.simhashSigsTable(
-        Tables.documents(s, d), "/tmp/graft_warehouse",
+        Tables.documents(s, d), BucketedOps.Warehouse,
         inputTag = Some(d)))),
 
     // Hapax legomena + type-token ratio per source - the
@@ -1664,7 +1664,7 @@ object SparkEntry {
     "q294_quality_dup" -> ((s, d) =>
       DedupOp.qualityDupReliabilityFromPairs(Tables.documents(s, d),
         DedupOp.ngramJaccardTable(Tables.documents(s, d),
-          "/tmp/graft_warehouse", inputTag = Some(d)))),
+          BucketedOps.Warehouse, inputTag = Some(d)))),
 
     // Wald-Wolfowitz runs test per event type: sign-of-(value-median)
     // serial randomness, raw integer statistic + expected-runs ppm.
@@ -1709,7 +1709,7 @@ object SparkEntry {
     * missing layout on demand; this hook only fronts the cost.
     */
   def warmLayouts(s: SparkSession, d: String): Unit = {
-    val wh = "/tmp/graft_warehouse"
+    val wh = BucketedOps.Warehouse
     BucketedOps.bucketedOrderRevenue(Tables.orders(s, d),
       Tables.lineitem(s, d), wh, inputTag = Some(d))
     BucketedOps.prunedSourceStats(Tables.documents(s, d), wh,

@@ -23,6 +23,12 @@ import graft.functions.DetAgg
   */
 object BucketedOps {
 
+  /** Root directory of every write-once layout (bucketed tables,
+    * signature and candidate tables, shared ground truths). The one
+    * place a per-session root would be derived.
+    */
+  val Warehouse: String = "/tmp/graft_warehouse"
+
   /** Write `df` as a bucketed+sorted external parquet table, replacing
     * any previous version. Bucket spec lives in the session catalog;
     * data lives under `warehouse`.

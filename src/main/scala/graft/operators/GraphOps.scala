@@ -399,9 +399,13 @@ object GraphOps {
     // ProfJoin session-flip: q115 −0.4 s, the one join-heavy query with
     // a uniform SHJ win) — but a SESSION flip regressed q164, so the
     // hint is scoped to THIS join only (guide §3.1: per-join choice,
-    // planner stats mis-pick SMJ here; both sides are the same
-    // basket-distinct frame, so no build-side OOM asymmetry).
-    // `spark.graft.triples.smj=true` restores the stock pick (A/B ref).
+    // planner stats mis-pick SMJ here). Memory requirement: the
+    // shuffled-hash join builds an in-memory hash table per partition
+    // and cannot spill, so each partition's slice of the (ok, pk)
+    // basket-distinct frame must fit in executor memory; the sort-merge
+    // join spills instead. Where that fails (a very skewed or huge
+    // basket partition), `spark.graft.triples.smj=true` restores the
+    // stock sort-merge pick.
     val stockJoin = lineitem.sparkSession.conf
       .getOption("spark.graft.triples.smj").contains("true")
     val rSide = if (stockJoin) li.as("r") else li.hint("shuffle_hash").as("r")

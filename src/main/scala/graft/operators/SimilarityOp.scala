@@ -1962,37 +1962,16 @@ object SimilarityOp {
       .reduce(_.unionByName(_))
     val w = Window.partitionBy(col("config"), col("qid"))
       .orderBy(col("sim").desc, col("vec_id"))
-    // A/B switch, MEASURED NEGATIVE and kept default-off (r16 opt
-    // round, ProfDedup ×4 same-window): arms share many (qid, vec_id)
-    // pairs, so scoring the DISTINCT pairs once and joining the sims
-    // back trades ~the duplication factor of map-side codegen cosine
-    // for one extra exchange of the candidate frame. The exchange
-    // loses: q85 base 3.05-3.79 s vs dedup 3.62-4.09 steady, q84/q157
-    // wash-to-base, q153 −0.1 s — the 64-dim cosine is too cheap to
-    // out-cost a shuffle of the plan's largest frame (same verdict
-    // class as the r9/r16 persist rejections). Identical values either
-    // way (same sim per pair, same window; SimilaritySpec parity test),
-    // so the switch stays for re-measurement at other scales — the
-    // sigLayout-flag precedent.
-    val dedupScore = embeddings.sparkSession.conf
-      .getOption("spark.graft.recallArms.dedupScore").contains("true")
-    // scored construction lives inside its arm (r16 advice: the former
-    // `else null` sentinel was only consumed under the same flag but
-    // invited an NPE on any refactor that split the two conditionals)
-    val tagged =
-      if (dedupScore) {
-        val scored = cands.select(col("qid"), col("vec_id")).distinct()
-          .join(corpusVecs(embeddings), Seq("vec_id"))
-          .join(broadcast(qframe), Seq("qid"))
-          .select(col("qid"), col("vec_id"),
-            round(graft.functions.CosineExpr.column(col("qv"), col("v")),
-              6).as("sim"))
-        cands.join(scored, Seq("qid", "vec_id"))
-      } else cands.join(corpusVecs(embeddings), Seq("vec_id"))
-        .join(broadcast(qframe), Seq("qid"))
-        .select(col("config"), col("qid"), col("vec_id"),
-          round(graft.functions.CosineExpr.column(col("qv"), col("v")), 6)
-            .as("sim"))
+    // Each config scores its own candidates. Scoring the DISTINCT
+    // (qid, vec_id) pairs once and joining the sims back was measured
+    // slower (same-window A/B ×4, sf0.1: q85 3.05-3.79 s per config vs
+    // 3.62-4.09 s deduplicated): the 64-dim cosine is too cheap to
+    // out-cost one more exchange of the plan's largest frame.
+    val tagged = cands.join(corpusVecs(embeddings), Seq("vec_id"))
+      .join(broadcast(qframe), Seq("qid"))
+      .select(col("config"), col("qid"), col("vec_id"),
+        round(graft.functions.CosineExpr.column(col("qv"), col("v")), 6)
+          .as("sim"))
     // r17: rank via the native bounded BottomKExpr fold instead of the
     // row_number window (the r16-verdict lead): the window shuffles the
     // FULL tagged candidate expansion into per-(config, qid) sorts,
@@ -2050,7 +2029,7 @@ object SimilarityOp {
                      centerIds: Seq[Long] = Seq(7L, 42L, 123L),
                      nProbe: Int = 2,
                      conf: LshConf = AnnDefault,
-                     warehouse: String = "/tmp/graft_warehouse",
+                     warehouse: String = BucketedOps.Warehouse,
                      inputTag: Option[String] = None): DataFrame = {
     val qframe = queryFrame(embeddings, qmod)
     val exact = sharedExactGT(embeddings, qmod, k, warehouse, inputTag)
@@ -2147,9 +2126,8 @@ object SimilarityOp {
   def annRecallSweep(embeddings: DataFrame, qmod: Int = 29, k: Int = 10,
                      centerIds: Seq[Long] = Seq(7L, 42L, 123L),
                      nSub: Int = 8,
-                     warehouse: String = "/tmp/graft_warehouse",
-                     inputTag: Option[String] = None,
-                     sigLayout: Boolean = true): DataFrame = {
+                     warehouse: String = BucketedOps.Warehouse,
+                     inputTag: Option[String] = None): DataFrame = {
     // Scan-sharing via in-memory persist A/B'd a THIRD time (round 9,
     // RunOne x4 steady): persisting the shared qframe+exact ground
     // truth measured 5.8 s vs 5.6 s recomputed — the 9 arms' redundant
@@ -2170,11 +2148,9 @@ object SimilarityOp {
     // write-once signature layout with a pushed band filter instead of
     // re-sketching the corpus per arm; the legacy arm's weight family
     // differs and computes live (r14, the sharedExactGT precedent).
-    // `sigLayout = false` forces all-live for the Prof85 A/B.
     val lshArms = SweepLsh.map { c =>
-      c.name -> (if (sigLayout)
-        lshCandidatesMaybeServed(embeddings, qmod, c, warehouse, inputTag)
-      else lshCandidatesMulti(embeddings, qmod, c))
+      c.name -> lshCandidatesMaybeServed(embeddings, qmod, c, warehouse,
+        inputTag)
     }
     val pqArms = SweepPq.map { case (name, p, s) =>
       name -> pqShortlistMulti(embeddings, qmod, centers, p,
@@ -2382,7 +2358,7 @@ object SimilarityOp {
     */
   def knnCalibration(embeddings: DataFrame, qmod: Int = 7,
                      k: Int = 10,
-                     warehouse: String = "/tmp/graft_warehouse",
+                     warehouse: String = BucketedOps.Warehouse,
                      inputTag: Option[String] = None): DataFrame = {
     val labels = embeddings.select(col("vec_id"),
       col("label").cast("long").as("lbl"))
@@ -2455,7 +2431,7 @@ object SimilarityOp {
 
   def knnLabelAccuracy(embeddings: DataFrame, qmod: Int = 7,
                        k: Int = 10,
-                       warehouse: String = "/tmp/graft_warehouse",
+                       warehouse: String = BucketedOps.Warehouse,
                        inputTag: Option[String] = None): DataFrame = {
     val labels = embeddings.select(col("vec_id"),
       col("label").cast("long").as("lbl"))
@@ -2603,7 +2579,7 @@ object SimilarityOp {
     */
   def truncRecall(embeddings: DataFrame, qmod: Int = 7, k: Int = 10,
                   c: Int = 50,
-                  warehouse: String = "/tmp/graft_warehouse",
+                  warehouse: String = BucketedOps.Warehouse,
                   inputTag: Option[String] = None): DataFrame = {
     val qframe = queryFrame(embeddings, qmod)
     val exact = sharedExactGT(embeddings, qmod, k, warehouse, inputTag)
@@ -2756,7 +2732,7 @@ object SimilarityOp {
     */
   def binaryQuantRecall(embeddings: DataFrame, qmod: Int = 7, k: Int = 10,
                         cs: Seq[Int] = Seq(50, 100),
-                        warehouse: String = "/tmp/graft_warehouse",
+                        warehouse: String = BucketedOps.Warehouse,
                         inputTag: Option[String] = None): DataFrame = {
     // everything below derives from the corpus frame, so rebinding it
     // once at entry carries the lifted fold conf through the Hamming
@@ -2908,7 +2884,7 @@ object SimilarityOp {
              centerIds: Seq[Long] = Seq(7L, 42L, 123L),
              nProbe: Int = 2,
              conf: LshConf = AnnDefault,
-             warehouse: String = "/tmp/graft_warehouse",
+             warehouse: String = BucketedOps.Warehouse,
              inputTag: Option[String] = None): DataFrame = {
     val qframe = queryFrame(embeddings, qmod)
     val nn1 = sharedExactGT(embeddings, qmod, 1, warehouse, inputTag)
@@ -3230,7 +3206,7 @@ object SimilarityOp {
     */
   def knnKappa(embeddings: DataFrame, qmod: Int = 7,
                k: Int = 10,
-               warehouse: String = "/tmp/graft_warehouse",
+               warehouse: String = BucketedOps.Warehouse,
                inputTag: Option[String] = None): DataFrame = {
     val labels = embeddings.select(col("vec_id"),
       col("label").cast("long").as("lbl"))

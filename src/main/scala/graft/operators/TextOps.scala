@@ -516,31 +516,18 @@ object TextOps {
     */
   def textRank(docs: DataFrame, k: Int = 20, w: Int = 3,
                minCount: Long = 10L, iters: Int = 3): DataFrame = {
-    // r17 (verdict item 5): MEASURED AND REJECTED as the default. The
-    // initial plan references the co-occurrence frame ~11× (22
-    // documents-parquet scans in plans/r16/q125_textrank_before.txt),
-    // which read as the textbook persist case (shuffle-heavy producer,
-    // tiny output) — but the ProfR17 same-window A/B (×4 alternating,
-    // sf0.1) says the persist LOSES every round: lazy
-    // 2.53/2.16/1.67/2.12 s vs persist 4.19/3.03/2.96/2.86 s. The
-    // duplication the static plan shows is already absorbed at runtime
-    // (AQE reuses identical exchange subtrees in the FINAL plan; the
-    // committed explain is the initial one), so the cache only adds a
-    // write barrier + serialized stage boundaries. The switch stays for
-    // re-measurement at other scales (`spark.graft.textrank
-    // .persistEdges=true`; values identical — caching only).
-    val persistEdges = docs.sparkSession.conf
-      .getOption("spark.graft.textrank.persistEdges").contains("true")
-    val e0 = tokenCooccurrence(docs, w, minCount)
+    // The co-occurrence frame is left lazy although the initial plan
+    // references it ~11×: a same-window A/B (×4 alternating, sf0.1)
+    // measured a persist slower every round (lazy 2.53/2.16/1.67/2.12 s
+    // vs persist 4.19/3.03/2.96/2.86 s). AQE already reuses the
+    // identical exchange subtrees in the final plan, so a cache only
+    // adds a write barrier and serialized stage boundaries.
+    val edges = tokenCooccurrence(docs, w, minCount)
       .select(col("tok_a").as("src"), col("tok_b").as("dst"))
-    val edges = if (persistEdges) e0.persist() else e0
-    val out = GraphOps.pageRankRanks(edges, iters)
+    GraphOps.pageRankRanks(edges, iters)
       .select(col("node").as("token"), col("r").as("rank_ppb"))
       .orderBy(col("rank_ppb").desc, col("token"))
       .limit(k)
-    if (persistEdges) {
-      try out.localCheckpoint() finally { edges.unpersist(); () }
-    } else out
   }
 
   /** Oracle SQL twin of [[textRank]]. */

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import graft.model.Model
 import graft.operators.{GeofenceOp, OutlierOp}
 
@@ -54,15 +54,16 @@ object TelcoPipelines {
     * `TrafficStreamProcessor.scala:58`) — without it each sink would
     * re-run the decode + store join. Call [[Outputs.release]] after the
     * sinks run; [[start]] does.
+    *
+    * Window geometry, watermark, k-means dimensions and the fence file
+    * come from `config`; `train` is per batch (a replayed batch scores
+    * but does not update the model).
     */
   def processBatch(celltower: DataFrame, attachStore: Option[DataFrame],
                    km: IncrementalKMeans,
-                   kmeansDims: Seq[String] = Seq("rtt", "byteLoss"),
-                   train: Boolean = true,
-                   windowSize: String = "30 seconds",
-                   slide: String = "2 seconds",
-                   watermark: String = "1 minute",
-                   fenceFile: Option[String] = None): Outputs = {
+                   config: PipelineConfig = PipelineConfig(),
+                   train: Boolean = true): Outputs = {
+    val kmeansDims = config.kmeansDimensions
     val enriched = (attachStore match {
       case Some(store) =>
         StreamOps.enrich(celltower,
@@ -74,17 +75,18 @@ object TelcoPipelines {
 
     val subscriberStats = StreamOps.metricStats(
       withTs.withColumn("subscriber_id", col("subscriber.id")),
-      Seq("subscriber_id"), windowSize, slide, watermark)
+      Seq("subscriber_id"), config.metricsWindow, config.metricsSlide,
+      config.watermark)
     val celltowerStats = StreamOps.metricStats(
       withTs.withColumn("cell", col("celltower.cell")), Seq("cell"),
-      windowSize, slide, watermark)
+      config.metricsWindow, config.metricsSlide, config.watermark)
 
     val points = enriched.select(
       col("bearerId").as("id"),
       col("celltower.location.lat").as("lat"),
       col("celltower.location.lng").as("lng"))
     // S6: a configured fence file is re-read per batch (hot reload)
-    val geofenceHits = fenceFile match {
+    val geofenceHits = config.geofenceFile match {
       case Some(f) => GeofenceOp.geofenceWith(points,
         GeofenceOp.fencesFromJson(celltower.sparkSession, f))
       case None => GeofenceOp.geofence(points)
@@ -103,66 +105,18 @@ object TelcoPipelines {
       cached = Seq(enriched, scored))
   }
 
-  /** Shared wiring for both `start` overloads: attach stream feeds the
-    * upsert store; celltower stream runs the fan-out per micro-batch
-    * (stream-static join against the store as of each batch — the
-    * reference's Cassandra-lookup semantics,
-    * `TrafficStreamProcessor.scala:52-56`). W1: the micro-batch clock is
-    * the optional trigger; W4: checkpointing per query under
-    * `checkpointDir/<name>`.
-    */
-  private def wire(attachStream: DataFrame, celltowerStream: DataFrame,
-                   store: KeyedUpsertStore, sink: (Outputs, Long) => Unit,
-                   runBatch: (DataFrame, Option[DataFrame], Long) => Outputs,
-                   trigger: Option[Trigger],
-                   checkpointDir: Option[String],
-                   afterBatch: Long => Unit = _ => ()): Seq[StreamingQuery] = {
-    def configure(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-                  name: String) = {
-      val t = trigger.map(w.trigger).getOrElse(w)
-      checkpointDir.map(d => t.option("checkpointLocation", s"$d/$name"))
-        .getOrElse(t)
-    }
-    val attachQ = configure(attachStream.writeStream.outputMode("append"), "attach")
-      .foreachBatch((batch: DataFrame, _: Long) => store.upsert(batch))
-      .start()
-    val fanoutQ = configure(celltowerStream.writeStream.outputMode("append"), "fanout")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val out = runBatch(batch, store.current, id)
-        try sink(out, id) finally out.release()
-        // post-sink state snapshot hook (model checkpoint). Runs
-        // BEFORE the batch's offset commit, so a crash in the gap
-        // replays the batch — OUTPUTS are at-least-once (the
-        // reference's ssc.checkpoint semantics too), but the MODEL
-        // update is exactly-once: runBatch sees the batch id and
-        // skips km.update for ids at or below the snapshot's
-        // lastAppliedBatch (r15 advice — no silent double-apply).
-        afterBatch(id)
-      }
-      .start()
-    Seq(attachQ, fanoutQ)
-  }
-
-  /** Streaming wiring with explicit parameters (reference defaults). */
-  def start(attachStream: DataFrame, celltowerStream: DataFrame,
-            storePath: String, km: IncrementalKMeans,
-            sink: (Outputs, Long) => Unit,
-            kmeansDims: Seq[String] = Seq("rtt", "byteLoss"),
-            trigger: Option[Trigger] = None,
-            checkpointDir: Option[String] = None): Seq[StreamingQuery] = {
-    val store = new KeyedUpsertStore(attachStream.sparkSession, storePath,
-      "bearerId", "ts")
-    wire(attachStream, celltowerStream, store, sink,
-      (batch, cur, _) => processBatch(batch, cur, km, kmeansDims),
-      trigger, checkpointDir)
-  }
-
-  /** Config-file-driven wiring — the analog of the reference booting its
-    * whole topology from `application.conf` (`AppConfig.scala:10-53`).
-    * Every knob (micro-batch clock, checkpoint, store path, window
-    * geometry, k-means hyper-parameters, fence file) comes from
-    * [[PipelineConfig]]; the model is built from the config too. Returns
-    * the running queries plus the model handle.
+  /** Streaming wiring, booted from [[PipelineConfig]] — the analog of
+    * the reference booting its whole topology from `application.conf`
+    * (`AppConfig.scala:10-53`). Every knob (micro-batch clock,
+    * checkpoint, store path, window geometry, k-means hyper-parameters,
+    * fence file) comes from the config; the model is built from it too.
+    * The attach stream feeds the upsert store; the celltower stream
+    * runs the fan-out per micro-batch (stream-static join against the
+    * store as of each batch — the reference's Cassandra-lookup
+    * semantics, `TrafficStreamProcessor.scala:52-56`). W1: the
+    * micro-batch clock is the config's trigger; W4: checkpointing per
+    * query under `checkpoint/<name>`. Returns the running queries plus
+    * the model handle.
     */
   def start(config: PipelineConfig, attachStream: DataFrame,
             celltowerStream: DataFrame,
@@ -178,21 +132,32 @@ object TelcoPipelines {
     // where the dead topology stopped (PipelineSpec restart e2e).
     val kmPath = config.checkpoint.map(d => s"$d/kmeans-model")
     kmPath.foreach(km.restoreFrom)
-    val queries = wire(attachStream, celltowerStream, store, sink,
-      // train only on batches NEWER than the restored snapshot's
-      // last-applied id: a batch replayed after a crash in the
-      // snapshot→offset-commit gap re-emits its outputs
-      // (at-least-once) but must not re-enter the model state
-      (batch, cur, id) => processBatch(batch, cur, km,
-        kmeansDims = config.kmeansDimensions,
-        train = id > km.lastAppliedBatch,
-        windowSize = config.metricsWindow, slide = config.metricsSlide,
-        watermark = config.watermark, fenceFile = config.geofenceFile),
-      Some(config.trigger), config.checkpoint,
-      afterBatch = id => {
+    def configure(w: DataStreamWriter[Row], name: String) = {
+      val t = w.trigger(config.trigger)
+      config.checkpoint.map(d => t.option("checkpointLocation", s"$d/$name"))
+        .getOrElse(t)
+    }
+    val attachQ = configure(attachStream.writeStream.outputMode("append"), "attach")
+      .foreachBatch((batch: DataFrame, _: Long) => store.upsert(batch))
+      .start()
+    val fanoutQ = configure(celltowerStream.writeStream.outputMode("append"), "fanout")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        // train only on batches NEWER than the restored snapshot's
+        // last-applied id: a batch replayed after a crash in the
+        // snapshot→offset-commit gap re-emits its outputs
+        // (at-least-once) but must not re-enter the model state
+        val out = processBatch(batch, store.current, km, config,
+          train = id > km.lastAppliedBatch)
+        try sink(out, id) finally out.release()
+        // post-sink model snapshot. Runs BEFORE the batch's offset
+        // commit, so a crash in the gap replays the batch — OUTPUTS are
+        // at-least-once (the reference's ssc.checkpoint semantics too),
+        // but the MODEL update is exactly-once via the train guard
+        // above (r15 advice — no silent double-apply).
         km.lastAppliedBatch = id
         kmPath.foreach(km.saveTo)
-      })
-    (queries, km)
+      }
+      .start()
+    (Seq(attachQ, fanoutQ), km)
   }
 }

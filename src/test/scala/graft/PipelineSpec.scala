@@ -41,12 +41,12 @@ class PipelineSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-e2e").toString
     val attachMem = MemoryStream[AttachEvent]
     val ctMem = MemoryStream[CelltowerEvent]
-    val km = new IncrementalKMeans(k = 2, dims = 2, decay = 1.0, seed = 1L)
 
     @volatile var lastOut: Option[TelcoPipelines.Outputs] = None
-    val queries = TelcoPipelines.start(
-      attachMem.toDF(), ctMem.toDF(), s"$dir/attach", km,
-      (out, _) => lastOut = Some(out))
+    val (queries, _) = TelcoPipelines.start(
+      streaming.PipelineConfig(batchMillis = 0L, storePath = s"$dir/attach",
+        kmeansK = 2),
+      attachMem.toDF(), ctMem.toDF(), (out, _) => lastOut = Some(out))
     try {
       // batch 1: attach events land first (store fills)
       attachMem.addData(attach("b1", 1, 1000L), attach("b2", 2, 1000L))

@@ -425,24 +425,6 @@ class SimilaritySpec extends SparkSuite {
     assert(served === live)
   }
 
-  test("recallArms dedup-score switch is row-identical to the default form") {
-    // the r16-opt A/B branch (spark.graft.recallArms.dedupScore) scores
-    // distinct (qid, vec_id) pairs once and joins sims back; it MUST be
-    // value-identical to the per-config scoring it replaces. Measured
-    // slower at sf0.1 (ProfDedup) and default-off; this pins the parity
-    // so the switch stays safe to re-measure at other scales.
-    val wh = java.nio.file.Files.createTempDirectory("dedup-wh").toString
-    val emb = Tables.embeddings(spark, sfDir)
-    val base = SimilarityOp.annRecallSweep(emb, warehouse = wh)
-      .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.recallArms.dedupScore", "true")
-    try {
-      val dedup = SimilarityOp.annRecallSweep(emb, warehouse = wh)
-        .collect().map(_.toSeq).toSeq
-      assert(dedup === base)
-    } finally spark.conf.unset("spark.graft.recallArms.dedupScore")
-  }
-
   test("recallArms window-rank switch is row-identical to the fold form, " +
        "zero-norm (NaN-sim) candidates included") {
     // r17: the default rank is the bounded BottomKExpr fold; the window
